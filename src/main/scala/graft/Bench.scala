@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // SPARK_GRAFT_SF_DIR may be a comma-separated list (r12 verdict #9 —
@@ -10,68 +9,10 @@ object Bench {
     // invocation).
     val sfDirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt, 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected L-BFGS line-search resets would otherwise spam the log
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "breeze.optimize", org.apache.logging.log4j.Level.ERROR)
-    // bounded ≤P-row summary windows (Ranks offsets, decile frames) are
-    // deliberately unpartitioned; see Verify for why lit(0) can't be used
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // noop sink: forces full materialization of every output column — a
-    // bare count() lets Catalyst prune the actual operator work away.
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) System.err.println(
-        s"BENCH WARN: SPARK_GRAFT_ONLY names match no query: ${unknown.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-
-    // Previous round's per-query minima (same out file, read BEFORE this
-    // run overwrites it): lets the bench SELF-CLASSIFY co-tenant phantoms
-    // — any query whose warm time jumps >2x with no code change gets
-    // extra controlled reruns IN-BAND instead of burning a builder+judge
-    // cycle next round (r13 verdict #8; r12 and r13 each lost one cycle
-    // to exactly this). Jackson ships with Spark (public dependency).
+    val spark = graft.core.Session()
+    val selected = SparkEntry.selected
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_QUERIES.json")
-    def prevTimes: Map[String, Map[String, Double]] = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(new java.io.File(outPath))
-      def qmap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, Double] = {
-        val q = node.get("queries")
-        if (q == null) Map.empty
-        else {
-          val it = q.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      }
-      val sp = root.get("scale_points")
-      if (sp != null) {
-        val it = sp.fields()
-        val b = Map.newBuilder[String, Map[String, Double]]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> qmap(e.getValue) }
-        b.result()
-      } else {
-        val sf = Option(root.get("sf")).map(_.asText()).getOrElse(sfDirs.head)
-        Map(sf -> qmap(root))
-      }
-    } catch { case _: Throwable => Map.empty }
-    val prev = prevTimes
     def loadavg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
@@ -86,28 +27,18 @@ object Bench {
       // FitCache counters are process-cumulative: snapshot so this dir's
       // summary reports ITS deltas, not the prior dirs' (advice r13)
       val (fcHits0, fcMisses0, _) = graft.core.FitCache.stats
-      val prevQ = prev.getOrElse(sfDir, Map.empty)
       // each query runs `runs` times; the per-query time is the MIN (sandbox
       // load noise inflates single runs by 2-4x — see the round-2 bench)
       val perRun = selected.map { case (name, fn) =>
+        // noop sink: forces full materialization of every output column —
+        // a bare count() lets Catalyst prune the actual operator work away
         def once(): (Boolean, Double) = {
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case t: Throwable => System.err.println(s"BENCH FAIL $name: $t"); false }
           (ok, (System.nanoTime() - t0) / 1e9)
         }
-        val timed0 = (1 to runs).map(_ => once())
-        // self-classifying rerun: min-of-runs > 2x last round's committed
-        // min (and above the 0.25 s floor where scheduler jitter dominates)
-        // → up to 2 extra runs now, at recorded loadavg, so the artifact
-        // itself says whether the jump reproduces under retry
-        val firstMin = timed0.collect { case (true, s) => s }.minOption
-        val extra = prevQ.get(name) match {
-          case Some(p) if p > 0 && firstMin.exists(m => m > 2 * p && m > 0.25) =>
-            (1 to 2).map(_ => once())
-          case _ => Seq.empty
-        }
-        val timed = timed0 ++ extra
+        val timed = (1 to runs).map(_ => once())
         // drop this query's SQL-cached frames before the next query runs:
         // per-query times must not depend on how much storage memory the
         // queries that happened to run earlier left behind (r12's final
@@ -115,9 +46,9 @@ object Bench {
         // isolation keeps the attribution clean; FitCache models and
         // persisted RDDs are driver-local / RDD-level and unaffected)
         spark.catalog.clearCache()
-        name -> ((timed, loadavg, extra.size))
+        name -> ((timed, loadavg))
       }
-      val results = perRun.map { case (name, (timed, _, _)) =>
+      val results = perRun.map { case (name, (timed, _)) =>
         val okTimes = timed.collect { case (true, s) => s }
         // a query that failed every run reports NEGATED min elapsed so the
         // json can never mistake a crash-at-start for a fast query
@@ -131,7 +62,7 @@ object Bench {
       // alone would silently drop all fit cost from cross-round comparisons
       // (r10 verdict finding). Both totals are reported side by side.
       val totalCold = perRun.values.collect {
-        case (timed, _, _) if timed.head._1 => timed.head._2 }.sum
+        case (timed, _) if timed.head._1 => timed.head._2 }.sum
       // per-dir DELTAS of the cumulative counters (live is a gauge)
       val (fcHits, fcMisses, fcLive) = graft.core.FitCache.stats
       val fcJson = s""""fitcache":{"hits":${fcHits - fcHits0},"misses":${fcMisses - fcMisses0},"live":$fcLive}"""
@@ -165,23 +96,16 @@ object Bench {
       // ALL run times (not just the min): separates co-tenant noise
       // (inflated single runs) from real first-run JIT/codegen effects —
       // the dbscan-canary instrumentation the r9 verdict asked for
-      val rd = perRun.toSeq.sortBy(_._1).map { case (k, (timed, _, _)) =>
+      val rd = perRun.toSeq.sortBy(_._1).map { case (k, (timed, _)) =>
         "\"" + k + "\":[" + timed.map { case (ok, s) =>
           (if (ok) s else -s).toString }.mkString(",") + "]"
       }.mkString("{", ",", "}")
       // per-query 1-min loadavg sampled right after each query's runs —
       // the self-classification evidence (r13 verdict #8): a slow query
       // at loadavg 8 is a co-tenant artifact, at loadavg 1 it's real
-      val lq = perRun.toSeq.sortBy(_._1).map { case (k, (_, lv, _)) =>
+      val lq = perRun.toSeq.sortBy(_._1).map { case (k, (_, lv)) =>
         "\"" + k + "\":" + f"$lv%.2f" }.mkString("{", ",", "}")
-      // queries that tripped the >2x-vs-previous-round rerun, with the
-      // previous min, first-pass min, and post-rerun final min in-band
-      val rr = perRun.toSeq.filter(_._2._3 > 0).sortBy(_._1).map { case (k, (timed, _, nx)) =>
-        val firstMin = timed.take(runs).collect { case (true, s) => s }.min
-        val finalMin = timed.collect { case (true, s) => s }.min
-        "\"" + k + "\":{" + f""""prev":${prevQ.getOrElse(k, -1.0)}%.3f,"first":$firstMin%.3f,"final":$finalMin%.3f,"extra_runs":$nx}"""
-      }.mkString("{", ",", "}")
-      val fileJson = s"""{"line":"file","queries":$qs,"runs_detail":$rd,"loadavg_q":$lq,"reruns":$rr,"failed":$failedJson,"runs":$runs,"loadavg":$load,"sf":"$sfDir",$fcJson,"total_cold":$totalCold,"metric":"total","value":$total,"unit":"sec","n_queries":${selected.size}}"""
+      val fileJson = s"""{"line":"file","queries":$qs,"runs_detail":$rd,"loadavg_q":$lq,"failed":$failedJson,"runs":$runs,"loadavg":$load,"sf":"$sfDir",$fcJson,"total_cold":$totalCold,"metric":"total","value":$total,"unit":"sec","n_queries":${selected.size}}"""
       // the committed out FILE carries the complete full-precision
       // per-query map; the (always-surviving) summary line REFERENCES it
       // by content hash so the file is verifiably THIS run's record even

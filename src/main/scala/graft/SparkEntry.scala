@@ -33,6 +33,22 @@ object SparkEntry {
       MetricsQueries.queries ++ AnalyticsQueries.queries ++ BoostQueries.queries ++
       ModelQueries.queries ++ StatTestQueries.queries
 
+  /** [[queries]] restricted to the comma-separated names in
+    * `SPARK_GRAFT_ONLY` (every query when unset): the one subset variable
+    * Bench and Verify read for local iteration. Names that match no query
+    * are reported on stderr. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { o =>
+      val unknown = o -- all.keySet
+      if (unknown.nonEmpty) System.err.println(
+        s"WARN: SPARK_GRAFT_ONLY names match no query: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    only.fold(all)(o => all.filter(kv => o(kv._1)))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for iterative/seeded ops (rows-only
     * check by design — see SURVEY.md §5). */

@@ -268,11 +268,6 @@ object DBSCANGrid {
               eps: Double, minPts: Int): DataFrame =
     summarize(fit(points, idCol, xCol, yCol, eps, minPts))
 
-  /** n-D variant of [[summary]]. */
-  def summaryND(points: DataFrame, idCol: String, featCols: Seq[String],
-                eps: Double, minPts: Int): DataFrame =
-    summarize(fitND(points, idCol, featCols, eps, minPts))
-
   /** Deterministic DBSCAN structure summary — the SQL-oracle-able slice of
     * the family: core/border/noise classification and the eps-pair count
     * are closed-form given (eps, minPts) (cluster LABELS additionally need

@@ -144,12 +144,6 @@ object TSVDGraft {
     eigSym(gb).eigenvalues.toArray.sorted(Ordering[Double].reverse)
       .take(k).map(l => math.sqrt(math.max(l, 0.0)))
   }
-
-  def singularValuesNarrow(df: DataFrame, features: Seq[String], k: Int): Array[Double] = {
-    val g = Moments.gram(df, features, None)
-    eigSym(g.xx).eigenvalues.toArray.sorted(Ordering[Double].reverse)
-      .take(k).map(l => math.sqrt(math.max(l, 0.0)))
-  }
 }
 
 /** Random projection (reference python/cuml/random_projection/

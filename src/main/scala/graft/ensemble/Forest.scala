@@ -91,23 +91,6 @@ object Forest {
     }.toDF("feature", "importance").orderBy(col("importance").desc, col("feature"))
   }
 
-  def regressorSummary(df: DataFrame, features: Seq[String], labelCol: String,
-                       numTrees: Int = 20, maxDepth: Int = 5, seed: Long = 42L): DataFrame = {
-    val input = withFeatures(df, features, Seq("_y" -> col(labelCol).cast("double")))
-    // seeded → deterministic → fit-once (keyed on the raw caller frame)
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-      "rf_reg", features.mkString(","), labelCol, numTrees, maxDepth, seed, MaxBins)) {
-      new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-        .setNumTrees(numTrees).setMaxDepth(maxDepth).setMaxBins(MaxBins).setSeed(seed)
-        .fit(input)
-    }
-    val scored = model.transform(input)
-    scored.agg(
-      r4(sqrt(avg((col("prediction") - col("_y")) * (col("prediction") - col("_y"))))).as("train_rmse"),
-      r4(avg(abs(col("prediction") - col("_y")))).as("train_mae"),
-      count(lit(1)).cast("long").as("n"))
-  }
-
   /** PARTIAL HASH GATE row for the seeded RF classifier (ann_ivf
     * precedent): the SQL-exact slice (scored-row count) plus the exact
     * forest invariant — every prediction is a label index — and the
@@ -230,29 +213,5 @@ object Forest {
       .groupBy(col("prediction"))
       .agg(count(lit(1)).cast("long").as("n"), r4(avg(col("_y"))).as("mean_label"))
       .orderBy("prediction")
-  }
-
-  /** FIL-style inference: train once, broadcast the model, score a stream
-    * of rows through the codegen'd transform; output is the score
-    * distribution — the inference pass itself is shuffle-free. */
-  def inferenceSummary(train: DataFrame, score: DataFrame, features: Seq[String],
-                       labelCol: String, numTrees: Int = 20, seed: Long = 42L): DataFrame = {
-    // cache the assembled train split: MLlib's tree growth iterates over it,
-    // and the upstream split filter (md5 per row) must not re-run per pass
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(train,
-      "rf_infer", features.mkString(","), labelCol, numTrees, seed, MaxBins)) {
-      val input = withFeatures(train, features, Seq("_y" -> col(labelCol).cast("double")))
-        .select(col("_fv"), col("_y")).cache()
-      input.count() // materialize before the iterative fit
-      try {
-        new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-          .setNumTrees(numTrees).setMaxDepth(5).setMaxBins(MaxBins).setSeed(seed).fit(input)
-      } finally input.unpersist(blocking = false)
-    }
-    val scored = model.transform(withFeatures(score, features, Seq.empty))
-    scored.agg(
-      count(lit(1)).cast("long").as("n_scored"),
-      r4(avg(col("prediction"))).as("mean_pred"),
-      r4(stddev_samp(col("prediction"))).as("sd_pred"))
   }
 }

@@ -1,16 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers graft's native expressions as SQL functions via the public
-  * `SparkSessionExtensions` hook:
+  * `SparkSessionExtensions` hook. [[graft.core.Session]] injects it, so
+  * every graft session resolves them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   ...
   * spark.sql("SELECT graft_dot(a.v, b.v) FROM ...")
   * }}}
   *
@@ -35,11 +33,4 @@ object GraftExtensions {
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     binary("graft_dot", classOf[DotProduct], DotProduct.apply),
     binary("graft_sqdist", classOf[SquaredDistance], SquaredDistance.apply))
-
-  /** Register on a live session (tests / notebooks where the builder has
-    * already run); `withExtensions`/`spark.sql.extensions` is the cluster
-    * path. */
-  def register(spark: SparkSession): Unit = functions.foreach { case (id, info, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-  }
 }

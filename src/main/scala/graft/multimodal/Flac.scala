@@ -331,7 +331,7 @@ object Flac {
       }
       val arr = out.result()
       Some((channels, (total min Int.MaxValue).toInt, arr))
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** One frame at byte `pos` → (interleaved samples, next byte pos). */

@@ -18,12 +18,6 @@ object Preprocessing {
       .select(col("label"), (dense_rank().over(w) - 1).cast("long").as("code"))
   }
 
-  /** Attach the code column to data rows — broadcast join against the tiny
-    * mapping, the scalable form of LabelEncoder.transform. */
-  def labelEncode(df: DataFrame, labelCol: String): DataFrame =
-    df.join(broadcast(labelEncoderMapping(df, labelCol)),
-      df(labelCol) === col("label"), "left").drop("label")
-
   /** Reproducible, engine-neutral train/test split: md5-hash of the key
     * column + seed, mod 1000 — the same rows land in the same split on any
     * cluster size, any engine (cuML's train_test_split shuffles by seed;

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named queries once and print timing + row count.
   * Usage: runMain graft.tools.RunQuery <sfDir> <name1,name2,...> [show] */
 object RunQuery {
@@ -9,15 +7,7 @@ object RunQuery {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val show = args.length > 2 && args(2) == "show"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
     names.foreach { n =>
       val t0 = System.nanoTime()
       try {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-6 session-4 analytics wave, cross-checked against driver-side
   * recomputation on sf0.001 (tiny enough to collect). */
 class AnalyticsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("prop_ztest matches a driver-side recomputation of the pooled z") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * evaluation per row through the barrier, and the physical plan is
   * asserted to carry the Generate node with a single UDF occurrence. */
 class BarrierSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
+  private lazy val spark = graft.core.Session()
   import graft.core.Barrier
 
   test("Barrier.once evaluates the expression exactly once per row") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sf0.001 plus the boosting invariants (weak-learner edge, monotone
   * training loss). */
 class BoostSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("stump_fit rank-1 split matches a brute-force exhaustive search") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** n-dimensional grid DBSCAN vs brute force. */
 class DbscanNdSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("3-D grid DBSCAN matches brute-force DBSCAN exactly on 1.2k points") {
     import spark.implicits._

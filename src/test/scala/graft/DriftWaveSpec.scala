@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Invariant pins for the drift/changepoint wave (ewma_chart,
   * page_hinkley, binseg_changepoint) at sf0.001. */
 class DriftWaveSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("ewma_chart: alarm bookkeeping is coherent per series") {

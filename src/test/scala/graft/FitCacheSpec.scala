@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the same table — that is what lets benchmark repeat runs and
   * sibling queries share one fit. */
 class FitCacheSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("same plan + params returns the memoized instance across fresh reads") {

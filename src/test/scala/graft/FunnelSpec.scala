@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class FunnelSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("funnel3 matches a per-user driver-side replay on sf0.001") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Classification-metric semantics against brute-force / hand-computed
   * ground truth. */
 class MetricsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   /** Quantize like Metrics.rocAuc (Spark round = HALF_UP on the decimal). */
   private def q4(x: Double): Double =

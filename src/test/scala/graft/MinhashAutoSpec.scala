@@ -8,7 +8,7 @@ import graft.dedup.Dedup
   * property the rule exists for — deeper bands shed random collision
   * mass while keeping planted near-dups. */
 class MinhashAutoSpec extends org.scalatest.funsuite.AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("autoParams grows one row per corpus decade, clamped to [2,5]") {
     assert(Dedup.autoParams(0).rowsPerBand == 2)

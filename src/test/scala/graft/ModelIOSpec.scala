@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * persisted model must load back parameter-exact and score identically
   * to the freshly-fitted one. */
 class ModelIOSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * library), verified here against hand-built payloads with known pixel
   * statistics; unknown formats fall back to byte statistics. */
 class MultimodalSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   /** 2×2 P6 PPM with channel values 0..11 (header comment included to

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class NaiveBayesSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   /** Planted class vocabularies: each class has exclusive marker tokens
     * mixed with shared filler — NB must recover the classes nearly

@@ -9,7 +9,7 @@ import graft.dedup.Dedup
   * including pairs that CROSS a block boundary and the gap-exclusion
   * edge (doc2 − doc1 == gap kept, gap+1 dropped). */
 class NgramJaccardSpec extends org.scalatest.funsuite.AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   private def grams(text: String, k: Int): Set[String] = {
     // mirror Dedup.normText: lower(trim(regexp_replace(text, "\\s+", " ")))

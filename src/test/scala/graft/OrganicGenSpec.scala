@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * base is itself ORGANIC — a near-dup base would make an "exact" dup
   * one token off its base's stored text and deflate the planted rate). */
 class OrganicGenSpec extends org.scalatest.funsuite.AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("every planted dup's base is organic, exact dups match stored text, near dups are 1-token edits") {
     val n = 8000L

@@ -6,7 +6,7 @@ import scala.math.abs
 
 /** Gopher-style repetition/filter metrics and domain-mixing weights. */
 class PipelineOpsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("document chunking tiles the token stream with the declared overlap") {
     import spark.implicits._

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-quality gates: the properties that keep these operators viable at
   * 100 TB — scan pruning, filter pushdown, broadcast joins, codegen. */
 class PlanSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =

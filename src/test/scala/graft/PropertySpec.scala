@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are deterministic while covering shapes a hand-written fixture never
   * would. */
 class PropertySpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   private def cases[A](gen: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
@@ -90,7 +90,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("graft functions register as SQL functions (extension path)") {
-    graft.functions.GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) d, " +
         "graft_sqdist(array(1.0d, 2.0d), array(3.0d, 1.0d)) s").head()

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rfm_segments), and its plan must carry no data-scale SinglePartition
   * exchange. */
 class RanksSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   import spark.implicits._
 
   private def frame(n: Int) = {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cross-checked against structural invariants + sibling operators on
   * sf0.001. */
 class Round12Wave2Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("kneser_ney: same bigram frame as add-one sibling, and KN smooths better") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 third late wave (count_min, ips_estimator, dp_count). */
 class Round12Wave3Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("count_min: one-sided error - estimates never undershoot, exact counts match") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 fourth late wave (permutation_test, louvain_move). */
 class Round12Wave4Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("permutation_test: p is the add-one extreme share and the null is calibrated") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * conformal_interval, bloom_join, bpe_train, mmr_diversify),
   * cross-checked against driver-side recomputation on sf0.001. */
 class Round12WaveSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("modularity: CC partition makes every edge internal; Q = sum of terms, bounded") {

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * under a running pinned stream is a FileNotFound crash, which is why
   * rollover goes through foreachBatch.) */
 class SeriesRolloverSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("foreachBatch scorer serves the overwritten model from the next batch on") {
     import spark.implicits._

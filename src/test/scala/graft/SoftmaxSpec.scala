@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Multiclass (softmax) logistic regression. */
 class SoftmaxSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("multinomial fit separates three planted blobs") {
     import spark.implicits._

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The round-6 hypothesis-test / ranking-diagnostic queries cross-checked
   * against driver-side recomputation on sf0.001 (tiny enough to collect). */
 class StatQueriesSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("welch_ttest matches a driver-side Welch recomputation on the same split") {

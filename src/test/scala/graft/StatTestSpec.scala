@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * at sf0.001 — each statistic's domain and its decision rule, beyond the
   * DuckDB hash gates. */
 class StatTestSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("kruskal_wallis: H is non-negative and the decision matches the 9.488 cut") {

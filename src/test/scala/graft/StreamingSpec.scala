@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   test("windowed event stats aggregate a memory stream") {
     import spark.implicits._

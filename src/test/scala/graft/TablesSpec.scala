@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * format must normalize to the SAME session-zoned microsecond timestamps.
   */
 class TablesSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   /** Write one events.parquet fixture under a fresh dir, return the dir. */
   private def fixture(tag: String)(write: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {

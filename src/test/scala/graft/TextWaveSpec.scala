@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * zipf_fit, heaps_law) at sf0.001 — semantic properties beyond the
   * DuckDB hash gates. */
 class TextWaveSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
   val sf = "/root/testdata/sf0.001"
 
   test("dedup_edit: ratios in [0,1], dups consistent with the 0.2 cut, candidates = minhash pairs") {

@@ -7,7 +7,7 @@ import scala.math.abs
 /** Estimation-depth TSA surface: Holt-Winters parameter fitting, KPSS
   * stationarity, ARIMA in-sample/forecast, singular-fit guards. */
 class TsaDepthSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = graft.core.Session()
 
   private def seriesDF(xs: Seq[Double], name: String = "s1") = {
     import spark.implicits._
